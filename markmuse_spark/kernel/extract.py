@@ -1,8 +1,8 @@
 """Unified extraction kernel: payload bytes -> assembled Markdown document.
 
 Per-document composition of the three kernel stages (the Spark operator in
-:mod:`markmuse_spark.operators.extract` calls the batch entry point from a
-``mapInPandas`` iterator):
+:mod:`markmuse_spark.operators.extract` calls :func:`extract_document` once
+per row of each Arrow batch inside its ``mapInArrow`` loop):
 
 1. dispatch on payload magic: ``%PDF`` -> PDF box-geometry extractor,
    otherwise HTML boilerplate-strip extractor
@@ -17,10 +17,13 @@ kill a 10^12-row job.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Optional
+from typing import Any, Optional
 
 from markmuse_spark.kernel import html_extract, pdf_extract
-from markmuse_spark.kernel.markdown_assembly import assemble_one
+from markmuse_spark.kernel.markdown_assembly import (
+    assemble_one,
+    assemble_one_enhanced,
+)
 
 
 def extract_pages_sniffed(payload) -> list[dict[str, Any]]:
@@ -55,19 +58,32 @@ def _partial_note(pages: list[dict[str, Any]]) -> Optional[str]:
     return f"PartialExtraction: {n_damaged}/{len(pages)} pages damaged"
 
 
-def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
+def extract_document(
+    url: str,
+    payload: Optional[bytes],
+    captions: Optional[dict[str, str]] = None,
+    enhanced: bool = False,
+) -> dict[str, Any]:
     """Extract + assemble one document; errors land in the ``error``
     field.  A damaged-but-salvageable PDF (truncated download, corrupt
     stream) yields BOTH: the recovered pages' markdown and a
-    deterministic ``PartialExtraction`` error note."""
+    deterministic ``PartialExtraction`` error note.
+
+    ``enhanced`` selects the A11 caption-injecting assembly tail
+    (``assemble_one_enhanced`` over ``captions``, which may be ``None``)
+    and adds the ``n_enhanced`` key; the plain row keeps exactly its
+    seven keys."""
     try:
         if payload is None or len(payload) == 0:
             raise ValueError("empty payload")
         # slice-compare inside the sniff, not startswith: payload may be
         # a zero-copy memoryview of the Arrow batch (PEP 3118 equality)
         pages = extract_pages_sniffed(payload)
-        doc = assemble_one(url, pages)
-        return {
+        if enhanced:
+            doc = assemble_one_enhanced(url, pages, captions)
+        else:
+            doc = assemble_one(url, pages)
+        row = {
             "url": url,
             "markdown": doc["markdown"],
             "extracted_text": doc["extracted_text"],
@@ -77,7 +93,8 @@ def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
             "error": _partial_note(pages),
         }
     except Exception as exc:
-        return {
+        doc = {"n_enhanced": 0}  # an error row enhances nothing
+        row = {
             "url": url,
             "markdown": None,
             "extracted_text": None,
@@ -86,45 +103,6 @@ def extract_document(url: str, payload: Optional[bytes]) -> dict[str, Any]:
             "n_chars": 0,
             "error": f"{type(exc).__name__}: {exc}",
         }
-
-
-def extract_batch(
-    urls: Iterable[str], payloads: Iterable[Optional[bytes]]
-) -> list[dict[str, Any]]:
-    """One Arrow batch of documents in, one list of result rows out."""
-    return [extract_document(u, p) for u, p in zip(urls, payloads)]
-
-
-def extract_document_enhanced(
-    url: str, payload: Optional[bytes], captions: Optional[dict[str, str]]
-) -> dict[str, Any]:
-    """Enhanced-mode variant (A11): same kernel dispatch, caption-injecting
-    assembly tail (``assemble_one_enhanced``)."""
-    from markmuse_spark.kernel.markdown_assembly import assemble_one_enhanced
-
-    try:
-        if payload is None or len(payload) == 0:
-            raise ValueError("empty payload")
-        pages = extract_pages_sniffed(payload)  # see extract_document
-        doc = assemble_one_enhanced(url, pages, captions)
-        return {
-            "url": url,
-            "markdown": doc["markdown"],
-            "extracted_text": doc["extracted_text"],
-            "n_pages": len(pages),
-            "n_images": len(doc["image_manifest"]),
-            "n_enhanced": doc["n_enhanced"],
-            "n_chars": len(doc["markdown"]),
-            "error": _partial_note(pages),
-        }
-    except Exception as exc:
-        return {
-            "url": url,
-            "markdown": None,
-            "extracted_text": None,
-            "n_pages": 0,
-            "n_images": 0,
-            "n_enhanced": 0,
-            "n_chars": 0,
-            "error": f"{type(exc).__name__}: {exc}",
-        }
+    if enhanced:
+        row["n_enhanced"] = doc["n_enhanced"]
+    return row

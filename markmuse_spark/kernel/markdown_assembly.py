@@ -1,4 +1,4 @@
-"""Production assembly kernel: the deterministic MarkMuse tail, batch-first.
+"""Production assembly kernel: the deterministic MarkMuse tail, per document.
 
 Byte-identical to :mod:`markmuse_spark.golden.oracle` (the fixture mint) and
 therefore to the reference semantics at ``/root/reference/markmuse.py:307-383``
@@ -6,11 +6,12 @@ therefore to the reference semantics at ``/root/reference/markmuse.py:307-383``
 link rewrite), ``:477-479`` (plain text) — verified by
 ``tests/test_assembly_parity.py``.
 
-Written for Arrow-batch execution inside pandas UDFs: the entry point is
-:func:`assemble_batch`, which takes columnar inputs for a batch of documents
-and returns columnar outputs.  All regexes are compiled once at module load;
-per-document work is a single scan over the joined markdown plus one pass
-over the image list — no quadratic re-probing, no per-character Python.
+Called once per document from the extraction operator's Arrow-batch loop
+(via :func:`markmuse_spark.kernel.extract.extract_document`): the entry
+points are :func:`assemble_one` and :func:`assemble_one_enhanced`.  All
+regexes are compiled once at module load; per-document work is a single
+scan over the joined markdown plus one pass over the image list — no
+quadratic re-probing, no per-character Python.
 """
 
 from __future__ import annotations
@@ -25,10 +26,6 @@ _SANITIZE = re.compile(r"[\\/*?:'\"<>|]")
 _IMG_LINK = re.compile(r"!\[([^\]]*)\]\(([^)]+)\)")
 _PROBE_EXTS = (".png", ".jpg", ".jpeg", ".gif", ".webp")
 _IMG_STRIP = re.compile(r"!\[.*?\]\(.*?\)")
-# kept for reference/tests: the dict-table str.translate is a PER-CHAR
-# dict lookup (measured 16x slower than the replace chain below — 0.54 s
-# vs 0.033 s per 8k docs; re.sub of the class sits between at 0.062 s)
-_FMT_TABLE = {ord(c): None for c in "#*_`~"}
 
 _B64 = base64.b64decode
 
@@ -49,22 +46,26 @@ def _decode_image(b64: str) -> Optional[tuple[str, bytes]]:
     else:
         content_type = "image/png"
         payload = b64
-    # b64decode itself discards whitespace (and any non-alphabet byte)
-    # before decoding, so the explicit cleanup changes nothing on the
-    # success path — build ``cleaned`` only when the padding-repair
-    # branch needs its whitespace-free length (round-8: the
-    # unconditional split/join copied every image payload once)
+    # b64decode itself discards ASCII whitespace (and any non-alphabet
+    # byte), so the cleanup changes nothing on the success path — build
+    # ``cleaned`` only on failure (round-8: the unconditional split/join
+    # copied every image payload once).  Retry it unpadded FIRST: non-ASCII
+    # whitespace (U+00A0, U+2028, ...) fails b64decode's ASCII check until
+    # str.split() strips it, as the reference does (markmuse.py:413-416)
     try:
         data = _B64(payload)
     except Exception:
         cleaned = "".join(payload.split())
-        rem = len(cleaned) % 4
-        if not rem:
-            return None
         try:
-            data = _B64(cleaned + "=" * (4 - rem))
+            data = _B64(cleaned)
         except Exception:
-            return None
+            rem = len(cleaned) % 4
+            if not rem:
+                return None
+            try:
+                data = _B64(cleaned + "=" * (4 - rem))
+            except Exception:
+                return None
     if len(data) < 100:
         return None
     return content_type, data
@@ -158,10 +159,10 @@ def rewrite_document(markdown: str, index: dict[str, str]) -> str:
 
 
 def to_plain_text(markdown: str) -> str:
-    """Image links stripped, markdown format chars removed.  The
-    replace chain equals ``translate(_FMT_TABLE)`` character for
-    character (each call is one C memchr scan; ``str.translate`` with a
-    dict table loops per character through dict lookups)."""
+    """Image links stripped, markdown format chars (``#*_`~``) removed.
+    A replace chain, not ``str.translate``: each call is one C memchr
+    scan, where a dict table loops per character through dict lookups
+    (measured 16x slower: 0.54 s vs 0.033 s per 8k docs)."""
     s = _IMG_STRIP.sub("", markdown)
     return (
         s.replace("#", "")
@@ -295,24 +296,3 @@ def assemble_one_enhanced(
         "image_manifest": manifest,
         "n_enhanced": n_enhanced,
     }
-
-
-def assemble_batch(
-    urls: Iterable[str], pages_col: Iterable[list[dict[str, Any]]]
-) -> tuple[list[str], list[str], list[list[dict]], list[int]]:
-    """Columnar batch entry point for the Arrow/pandas UDF layer.
-
-    Returns parallel lists ``(markdown, extracted_text, manifests,
-    n_images)`` for the batch.
-    """
-    out_md: list[str] = []
-    out_text: list[str] = []
-    out_manifest: list[list[dict]] = []
-    out_n: list[int] = []
-    for url, pages in zip(urls, pages_col):
-        doc = assemble_one(url, pages or [])
-        out_md.append(doc["markdown"])
-        out_text.append(doc["extracted_text"])
-        out_manifest.append(doc["image_manifest"])
-        out_n.append(len(doc["image_manifest"]))
-    return out_md, out_text, out_manifest, out_n

@@ -100,10 +100,8 @@ def _default_parallelism(spark) -> int:
 #: Scale-adaptive by construction: width grows linearly with input
 #: bytes until it hits the cluster's parallelism, and genuinely wide
 #: inputs never reach the repartition at all (the provably-wide
-#: early-out).  Env-tunable for hosts whose per-task overhead differs.
-_UDF_SPLIT_BYTES = int(
-    __import__("os").environ.get("MARKMUSE_UDF_SPLIT_BYTES", str(256 * 1024))
-)
+#: early-out).
+_UDF_SPLIT_BYTES = 256 * 1024
 
 
 def _parallelize_for_udf(df: DataFrame, width: "int | None" = None) -> DataFrame:

@@ -24,13 +24,20 @@ from pyspark.sql import DataFrame
 
 from markmuse_spark.kernel.extract import extract_document
 
-RESULT_DDL = (
-    "url string, markdown string, extracted_text string, n_pages int, "
-    "n_images int, n_chars long, error string, partition_id int"
+# The result columns, declared once: the DDL, the Arrow schema and the
+# kernel row keys all derive from this list.  ``n_enhanced`` exists only
+# in enhanced mode; ``partition_id`` is the loop's, not the kernel's.
+_COLUMNS = (
+    ("url", "string"),
+    ("markdown", "string"),
+    ("extracted_text", "string"),
+    ("n_pages", "int"),
+    ("n_images", "int"),
+    ("n_enhanced", "int"),
+    ("n_chars", "long"),
+    ("error", "string"),
+    ("partition_id", "int"),
 )
-
-_COLS = ("url", "markdown", "extracted_text", "n_pages", "n_images", "n_chars", "error")
-
 
 def _binary_views(col) -> list:
     """Per-row ZERO-COPY memoryview slices of an Arrow binary column
@@ -114,35 +121,17 @@ class PartitionMetricsParam(AccumulatorParam):
         return a
 
 
-def extract_markdown(
-    pages: DataFrame,
-    url_col: str = "url",
-    payload_col: str = "html",
-    metrics_acc=None,
-) -> DataFrame:
-    """Map the extraction kernel over (url, payload) with per-row error
-    capture (A19 analog: one bad document never kills the job) and the
-    executor partition id recorded for the lineage sidecar (A20 analog).
-
-    ``metrics_acc``: optional ``PartitionMetricsParam`` accumulator; when
-    given, each task adds its partition's url/ok/err/char/image counts as
-    it finishes, so the lineage sidecar comes out of the SAME pass as the
-    write — no second scan of the committed output (at 10^12 rows the
-    re-read is real money even column-pruned)."""
+def _extract_loop(frame: DataFrame, enhanced: bool, metrics_acc) -> DataFrame:
+    """The one extraction run loop, shared by both modes: map the kernel
+    over ``frame``'s ``(url, payload)`` columns — plus the caption map
+    column in enhanced mode — with per-row error capture and the
+    executor partition id recorded for the lineage sidecar."""
     import pyarrow as pa  # deferred: resolved on executors too
 
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("markdown", pa.string()),
-            ("extracted_text", pa.string()),
-            ("n_pages", pa.int32()),
-            ("n_images", pa.int32()),
-            ("n_chars", pa.int64()),
-            ("error", pa.string()),
-            ("partition_id", pa.int32()),
-        ]
-    )
+    arrow_type = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+    columns = [c for c in _COLUMNS if enhanced or c[0] != "n_enhanced"]
+    schema = pa.schema([(name, arrow_type[typ]) for name, typ in columns])
+    keys = [name for name, _ in columns[:-1]]  # all but partition_id
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         from pyspark import TaskContext
@@ -153,10 +142,20 @@ def extract_markdown(
         for batch in batches:
             urls = batch.column(0).to_pylist()
             payloads = _binary_views(batch.column(1))
-            cols: tuple[list, ...] = ([], [], [], [], [], [], [])
-            for url, payload in zip(urls, payloads):
-                row = extract_document(url, payload)
-                for j, name in enumerate(_COLS):
+            if enhanced:
+                # pyarrow map cells arrive as [(k, v), ...] or None
+                caps = batch.column(2).to_pylist()
+                rows = (
+                    extract_document(
+                        url, payload, dict(cap) if cap else None, enhanced=True
+                    )
+                    for url, payload, cap in zip(urls, payloads, caps)
+                )
+            else:
+                rows = map(extract_document, urls, payloads)
+            cols: list[list] = [[] for _ in keys]
+            for row in rows:
+                for j, name in enumerate(keys):
                     cols[j].append(row[name])
                 n_rows += 1
                 n_err += row["error"] is not None
@@ -186,18 +185,26 @@ def extract_markdown(
                 }
             )
 
-    return pages.select(url_col, payload_col).mapInArrow(run, RESULT_DDL)
+    ddl = ", ".join(f"{name} {typ}" for name, typ in columns)
+    return frame.mapInArrow(run, ddl)
 
 
-ENHANCED_DDL = (
-    "url string, markdown string, extracted_text string, n_pages int, "
-    "n_images int, n_enhanced int, n_chars long, error string, partition_id int"
-)
+def extract_markdown(
+    pages: DataFrame,
+    url_col: str = "url",
+    payload_col: str = "html",
+    metrics_acc=None,
+) -> DataFrame:
+    """Map the extraction kernel over (url, payload) with per-row error
+    capture (A19 analog: one bad document never kills the job) and the
+    executor partition id recorded for the lineage sidecar (A20 analog).
 
-_ENH_COLS = (
-    "url", "markdown", "extracted_text", "n_pages", "n_images", "n_enhanced",
-    "n_chars", "error",
-)
+    ``metrics_acc``: optional ``PartitionMetricsParam`` accumulator; when
+    given, each task adds its partition's url/ok/err/char/image counts as
+    it finishes, so the lineage sidecar comes out of the SAME pass as the
+    write — no second scan of the committed output (at 10^12 rows the
+    re-read is real money even column-pruned)."""
+    return _extract_loop(pages.select(url_col, payload_col), False, metrics_acc)
 
 
 def deterministic_captions(pages: DataFrame, max_images_per_page: int = 4,
@@ -230,7 +237,6 @@ def extract_markdown_enhanced(
     url_col: str = "url",
     payload_col: str = "html",
     metrics_acc=None,
-    salt_parallelism: int | None = None,
 ) -> DataFrame:
     """A11 enhanced mode as a Spark operator: extraction + caption-injecting
     assembly in one Arrow pass.
@@ -239,40 +245,8 @@ def extract_markdown_enhanced(
     a (separate) captioning job.  It is grouped to one map per url and
     joined on url; at 10^12 rows this is a shuffle join co-partitioned on
     url (captions are small per url, never a cross product).  Pages without
-    captions take the left-outer path (nothing enhanced, refs verbatim).
-
-    ``salt_parallelism``: when set, the JOINED frame is re-shuffled with
-    the same size-aware salted slot rule the plain path uses (giant
-    payloads get a slot of their own, small docs share
-    ``4 * salt_parallelism`` salted slots) so one 100 MB payload cannot
-    straggle the caption join's url-hash partitioning.  This is a SECOND
-    shuffle on top of the join's — MEASURED on the adversarial corpus
-    (20k docs, ~100x-median stragglers at 0.1% frequency, local[8]):
-    plain join 2.6-3.0 s vs salted 3.4 s, i.e. the extra shuffle costs
-    ~25% and buys nothing at this skew (each url-hash partition holds
-    thousands of docs, so one 100x doc adds only ~5% to its partition).
-    Default off; enable when single payloads approach a partition's
-    whole compute budget (payload_bytes x docs_per_partition skew math,
-    not this corpus's)."""
-    import pyarrow as pa
-
+    captions take the left-outer path (nothing enhanced, refs verbatim)."""
     from pyspark.sql import functions as F
-
-    from markmuse_spark.kernel.extract import extract_document_enhanced
-
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("markdown", pa.string()),
-            ("extracted_text", pa.string()),
-            ("n_pages", pa.int32()),
-            ("n_images", pa.int32()),
-            ("n_enhanced", pa.int32()),
-            ("n_chars", pa.int64()),
-            ("error", pa.string()),
-            ("partition_id", pa.int32()),
-        ]
-    )
 
     cap_map = captions.groupBy(url_col).agg(
         F.map_from_entries(
@@ -280,61 +254,7 @@ def extract_markdown_enhanced(
         ).alias("_captions")
     )
     joined = pages.select(url_col, payload_col).join(cap_map, url_col, "left")
-    if salt_parallelism is not None:
-        from markmuse_spark.plans.pipeline import salted_repartition
-
-        joined = salted_repartition(
-            joined, salt_parallelism, payload_col=payload_col, url_col=url_col
-        )
-
-    def run(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        n_rows = n_err = n_partial = sum_chars = sum_images = 0
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            payloads = _binary_views(batch.column(1))
-            caps = batch.column(2).to_pylist()
-            cols: tuple[list, ...] = ([], [], [], [], [], [], [], [])
-            for url, payload, cap in zip(urls, payloads, caps):
-                # pyarrow map cells arrive as [(k, v), ...] or None
-                cap_d = dict(cap) if cap else None
-                row = extract_document_enhanced(url, payload, cap_d)
-                for j, name in enumerate(_ENH_COLS):
-                    cols[j].append(row[name])
-                n_rows += 1
-                n_err += row["error"] is not None
-                # partial-salvage rows (damaged PDFs whose intact pages
-                # shipped) are a SUBSET of err_count — split out so an
-                # operator dashboard can tell "kept with disclosure"
-                # from "dead row" at a glance
-                n_partial += (row["error"] or "").startswith(
-                    "PartialExtraction:"
-                )
-                sum_chars += row["n_chars"]
-                sum_images += row["n_images"]
-            arrays = [
-                pa.array(c, type=schema.field(i).type) for i, c in enumerate(cols)
-            ]
-            arrays.append(pa.array([pid] * len(urls), type=pa.int32()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-        if metrics_acc is not None and n_rows:
-            metrics_acc.add(
-                {
-                    pid: {
-                        "url_count": n_rows,
-                        "ok_count": n_rows - n_err,
-                        "err_count": n_err,
-                        "partial_count": n_partial,
-                        "sum_chars": sum_chars,
-                        "sum_images": sum_images,
-                    }
-                }
-            )
-
-    return joined.mapInArrow(run, ENHANCED_DDL)
+    return _extract_loop(joined, True, metrics_acc)
 
 
 IMAGES_DDL = (

@@ -182,9 +182,7 @@ def run_extraction(
     0.1% frequency, local[8]) adding the salted re-shuffle after the
     join read 3.4 s vs 2.6-3.0 s without, i.e. the second shuffle costs
     ~25% and the straggler isolation buys nothing at this skew (a 100x
-    doc adds ~5% to a thousands-of-docs hash partition).  For heavier
-    skew, ``extract_markdown_enhanced(salt_parallelism=...)`` turns the
-    post-join salt on."""
+    doc adds ~5% to a thousands-of-docs hash partition)."""
     started_at = _dt.datetime.now(_dt.timezone.utc)
     parallelism = spark.sparkContext.defaultParallelism
 

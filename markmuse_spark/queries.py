@@ -1212,7 +1212,8 @@ def p_corpus_curation(spark, sf_dir):
     from markmuse_spark.plans.cache import tracked_persist
     from markmuse_spark.sources import corpus
 
-    pages = corpus.pages_dataframe(spark, 200, seed=42, partitions=8)
+    partitions = 8
+    pages = corpus.pages_dataframe(spark, 200, seed=42, partitions=partitions)
     base = tracked_persist(
         extract_markdown(pages)
         .filter(F.col("error").isNull())
@@ -1249,9 +1250,9 @@ def p_corpus_curation(spark, sf_dir):
         num_perm=64, bands=32, threshold=0.5,
         # the survivor frame is a persisted intermediate (no file
         # provenance, so the size-aware width rule can't see it) of a
-        # 200-doc corpus generated at partitions=8 — match that width
-        # instead of fanning the shingle UDF out to 32 near-empty tasks
-        udf_width=8,
+        # 200-doc corpus — match its generated width instead of fanning
+        # the shingle UDF out to 32 near-empty tasks
+        udf_width=partitions,
     )
     dominated = pairs.select(F.col("doc_b").alias("url")).distinct()
     return (

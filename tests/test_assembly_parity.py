@@ -11,6 +11,8 @@ from __future__ import annotations
 import base64
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from markmuse_spark.golden import fixtures, oracle
 from markmuse_spark.kernel import markdown_assembly as kernel
@@ -36,18 +38,71 @@ def test_random_corpus():
         _assert_doc_parity(doc)
 
 
-def test_batch_matches_per_doc():
-    docs = fixtures.random_documents(50, seed=7)
-    urls = [d["url"] for d in docs]
-    md, text, manifests, n_imgs = kernel.assemble_batch(
-        urls, [d["pages"] for d in docs]
+# --- image normalization: kernel vs oracle, differential ---------------
+
+_SPACES = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+
+
+def _normalize_both(page_idx, img_idx, img_id, b64):
+    """Kernel and oracle on one image.  The kernel takes the 1-based
+    page number, the oracle the 0-based page index."""
+    got = kernel._normalize_image(
+        page_idx + 1, img_idx, {"id": img_id, "image_base64": b64}
     )
-    for i, d in enumerate(docs):
-        want = oracle.assemble_document(d["url"], d["pages"])
-        assert md[i] == want["markdown"]
-        assert text[i] == want["extracted_text"]
-        assert manifests[i] == want["image_manifest"]
-        assert n_imgs[i] == len(want["image_manifest"])
+    want = oracle.normalize_image(page_idx, img_idx, img_id, b64)
+    return got, want
+
+
+@pytest.mark.parametrize("ws", _SPACES, ids=lambda c: f"U+{ord(c):04X}")
+def test_normalize_image_every_whitespace_codepoint(ws):
+    b64 = base64.b64encode(bytes(range(150))).decode()
+    got, want = _normalize_both(0, 0, None, b64[:40] + ws + b64[40:])
+    assert want is not None and len(want[3]) == 150
+    assert got == want
+
+
+_HEADERS = st.one_of(
+    st.sampled_from(
+        ["", "data:image/jpeg;base64,", "data;base64,", "image/gif;base64,",
+         "data:image/png:x;base64,", "a:b;c,d;base64,"]
+    ),
+    st.text(alphabet=":;/,ab ", max_size=12).map(lambda h: h + ";base64,"),
+)
+_INSERTS = st.lists(
+    st.tuples(
+        st.integers(min_value=0),
+        st.one_of(
+            st.sampled_from(_SPACES),
+            st.characters(min_codepoint=0x80),  # non-ASCII junk
+            st.sampled_from(list("!=-_.")),
+        ),
+    ),
+    max_size=6,
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    data=st.binary(min_size=90, max_size=200),
+    cut=st.integers(min_value=0, max_value=3),
+    header=_HEADERS,
+    inserts=_INSERTS,
+    img_id=st.one_of(st.none(), st.sampled_from(["fig", "a.png", "b/c?.JPG"])),
+    page_idx=st.integers(min_value=0, max_value=3),
+    img_idx=st.integers(min_value=0, max_value=3),
+)
+def test_normalize_image_matches_oracle(
+    data, cut, header, inserts, img_id, page_idx, img_idx
+):
+    # stripping the padding and then ``cut`` characters covers every
+    # length remainder 0-3 of the base64 body
+    body = base64.b64encode(data).decode().rstrip("=")
+    b64 = header + body[: len(body) - cut]
+    for pos, ch in inserts:
+        pos %= len(b64) + 1
+        b64 = b64[:pos] + ch + b64[pos:]
+    got, want = _normalize_both(page_idx, img_idx, img_id, b64)
+    assert got == want
 
 
 # --- targeted pins for the nastiest rules -------------------------------

@@ -281,6 +281,62 @@ def test_enhanced_run_with_captions(spark, tmp_path):
     one = df.filter(F.col("n_enhanced") > 0).select("markdown").first()
     assert "**AI图片分析**：" in one["markdown"]
 
+    # error path: with no captions, enhanced mode must report the same
+    # error rows, counts and accumulator totals as plain mode
+    from markmuse_spark.operators.extract import (
+        PartitionMetricsParam, extract_markdown_enhanced,
+    )
+    from markmuse_spark.sources import pdf_writer
+
+    page = {
+        "columns": 1,
+        "blocks": [{"t": "p", "spans": [("", "salvaged body text")]}],
+        "compress": False, "tj": False, "hex": False, "hex16": False,
+        "cid": False, "cid_noto": False,
+    }
+    pdf = pdf_writer.write_pdf([page, page])
+    frame = spark.createDataFrame(
+        [
+            ("https://e.example/null", None),
+            ("https://e.example/empty", b""),
+            ("https://e.example/cut.pdf", pdf[: pdf.rfind(b"endstream") - 5]),
+            ("https://e.example/ok.html", b"<html><body><p>hello</p></body></html>"),
+        ],
+        "url string, html binary",
+    )
+    no_captions = spark.createDataFrame([], "url string, img_id string, description string")
+    acc_plain, acc_enh = (
+        spark.sparkContext.accumulator({}, PartitionMetricsParam()) for _ in range(2)
+    )
+    plain = {
+        r["url"]: r for r in extract_markdown(frame, metrics_acc=acc_plain).collect()
+    }
+    enh = {
+        r["url"]: r
+        for r in extract_markdown_enhanced(
+            frame, no_captions, metrics_acc=acc_enh
+        ).collect()
+    }
+    assert plain.keys() == enh.keys() and len(plain) == 4
+    for url, p in plain.items():
+        e = enh[url]
+        assert (e["error"], e["n_pages"], e["n_images"]) == (
+            p["error"], p["n_pages"], p["n_images"]
+        ), url
+        assert e["n_enhanced"] == 0, url
+    assert plain["https://e.example/null"]["error"] == "ValueError: empty payload"
+    assert plain["https://e.example/cut.pdf"]["error"].startswith("PartialExtraction:")
+    assert plain["https://e.example/ok.html"]["error"] is None
+
+    def totals(acc):
+        keys = ("url_count", "err_count", "partial_count", "sum_images")
+        return {k: sum(m[k] for m in acc.value.values()) for k in keys}
+
+    assert totals(acc_plain) == totals(acc_enh)
+    assert totals(acc_plain)["url_count"] == 4
+    assert totals(acc_plain)["err_count"] == 3
+    assert totals(acc_plain)["partial_count"] == 1
+
 
 def test_binary_views_are_zero_copy_and_null_safe():
     """The Arrow payload accessor must slice the batch's data buffer
