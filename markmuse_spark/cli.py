@@ -41,7 +41,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--big-bytes", type=int, default=None,
-                    help="size threshold for dedicated shuffle slots")
+                    help="docs at or above this size are shuffled on their full "
+                         "url hash instead of a salted slot")
     ap.add_argument("--captions", default=None,
                     help="enhanced mode (A11): parquet path of (url, img_id, "
                          "description), or 'fake' for the deterministic "

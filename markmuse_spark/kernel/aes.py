@@ -1,18 +1,21 @@
-"""AES-128/256 from scratch (FIPS-197) for encrypted-PDF support.
+"""AES-128/256 for encrypted-PDF support: OpenSSL first, FIPS-197 fallback.
 
-Why hand-rolled: the sandbox has no ``cryptography``/``pycryptodome``,
-and the reference reads any PDF via its OCR service
+The reference reads any PDF via its OCR service
 (``/root/reference/markmuse.py:266-299``) so it never needs a cipher —
 but a wild corpus contains AES-encrypted PDFs (AESV2 since Acrobat 7,
 AESV3/AES-256 the modern default), and an extraction engine that fails
-them all leaves real data on the floor.  Everything here derives from
+them all leaves real data on the floor.  ``cryptography>=43`` is a
+declared dependency, and when it imports (the default) the public entry
+points below run on OpenSSL.  The from-scratch code in this module is
+the fallback for an interpreter without it and the conformance
+reference the OpenSSL path is tested against.  Everything here derives from
 the public FIPS-197 spec; the S-box and GF(2^8) multiplication tables
 are COMPUTED at import from the field definition (multiplicative
 inverse + affine transform) rather than transcribed, and the round
 functions use the classic 32-bit T-table decomposition (one fused
 SubBytes+ShiftRows+MixColumns lookup per state byte).
 
-Two execution styles, matched to where each runs:
+The fallback has two execution styles, matched to where each runs:
 
 * **Scalar / serial** (:func:`encrypt_block`, :func:`cbc_encrypt`) —
   pure-Python T-table rounds on four 32-bit words.  Used where
@@ -21,7 +24,7 @@ Two execution styles, matched to where each runs:
   AES-CBC-2048 rounds are *deliberately* sequential (password
   hardening — native-AES readers pay the same block count).
 * **Vectorized batch decrypt** (:func:`cbc_decrypt_batch`) — the
-  extraction hot path.  CBC *decryption* is embarrassingly parallel
+  fallback's extraction hot path.  CBC *decryption* is embarrassingly parallel
   (ECB-decrypt every block, then XOR each with the previous
   ciphertext block), and AddRoundKey is the ONLY key-dependent step
   of the T-table inverse cipher — so one numpy pass decrypts every
@@ -34,8 +37,8 @@ from __future__ import annotations
 
 import numpy as np
 
-# Optional OpenSSL-backed fast path (round-8 optimization): when the
-# public ``cryptography`` package is importable, the CBC/ECB entry
+# OpenSSL-backed default path (round-8 optimization): when the
+# ``cryptography`` dependency is importable, the CBC/ECB entry
 # points below dispatch to it — byte-identical output (AES is AES; the
 # parity is pinned by tests/test_kernel_pdf.py::test_aes_openssl_parity)
 # at native speed, which matters because the PDF 2.0 Algorithm-2.B KDF

@@ -5,12 +5,12 @@ Spark-first re-expression of the reference's control plane:
 
 * **resume anti-join** (A21, ``task_api/routes.py:144-154`` analog):
   previously committed urls are excluded before any payload is read
-* **salted size-aware repartition** (SURVEY §4 custom item 1): every row
-  gets a shuffle *slot*; small docs share ``oversub * parallelism`` salted
-  slots keyed on ``xxhash64(url)``, giant docs (>= ``big_bytes``) each get
-  their own slot so a 100 MB PDF never queues thousands of small pages
-  behind it — AQE's skew handling only covers shuffle joins, not UDF
-  compute skew, so this is explicit
+* **salted repartition** (SURVEY §4 custom item 1): every row gets a
+  shuffle *slot* (``pmod(xxhash64(url), oversub * parallelism)``, or the
+  full ``xxhash64(url)`` for docs >= ``big_bytes``), and the rows are
+  hash-partitioned on that slot into ``oversub * parallelism``
+  partitions.  Slots collide and giants share partitions with small
+  docs (:func:`salted_repartition`)
 * **atomic publish**: each run writes ``extracted/run_id=<id>/`` through
   Spark's committer; a run directory counts as committed only when its
   ``_SUCCESS`` marker exists (Hadoop commit-protocol semantics — the
@@ -140,12 +140,17 @@ def salted_repartition(
     payload_col: str = "html",
     url_col: str = "url",
 ) -> DataFrame:
-    """One-pass skew-aware shuffle.
+    """One-pass shuffle of the extraction input on a salted slot column.
 
-    ``slot`` is the shuffle key: small docs -> ``pmod(xxhash64(url),
-    small_slots)`` (salted, uniform); giant docs -> full ``xxhash64(url)``
-    (a unique slot each, so no partition accumulates more than one giant
-    plus its hash-share of small docs).
+    ``slot`` is the shuffle key: docs under ``big_bytes`` ->
+    ``pmod(xxhash64(url), small_slots)``; larger docs -> the full
+    ``xxhash64(url)``.  ``repartition(small_slots, slot)`` then hashes
+    the slot values again (Murmur3, mod ``small_slots``), so slots are
+    not partitions: the ``small_slots`` small-doc values collide (on
+    crawl_fresh seed 41 at ``parallelism=2`` the 8 slots fill 4 of the 8
+    partitions, with 500/983/977/1540 rows), and each giant lands in one
+    of the same partitions, next to small docs and possibly other giants.
+    Nothing here gives a giant a partition of its own.
     """
     small_slots = max(1, parallelism * oversub)
     slot = F.when(
@@ -181,8 +186,8 @@ def run_extraction(
     on the adversarial corpus (20k docs, ~100x-median stragglers at
     0.1% frequency, local[8]) adding the salted re-shuffle after the
     join read 3.4 s vs 2.6-3.0 s without, i.e. the second shuffle costs
-    ~25% and the straggler isolation buys nothing at this skew (a 100x
-    doc adds ~5% to a thousands-of-docs hash partition)."""
+    ~25% and buys nothing at this skew (a 100x doc adds ~5% to a
+    thousands-of-docs hash partition)."""
     started_at = _dt.datetime.now(_dt.timezone.utc)
     parallelism = spark.sparkContext.defaultParallelism
 
