@@ -8,3 +8,8 @@ for the one operator Spark lacks (layout extraction), explicit skew/resume
 """
 
 __version__ = "0.1.0"
+
+from markmuse_spark.worker_zipimport import install_in_worker as _install_in_worker
+
+# a no-op outside a Spark task; see worker_zipimport
+_install_in_worker()

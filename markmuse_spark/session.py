@@ -19,8 +19,6 @@ def get_spark(
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` is capped low because
     rows carry multi-KB..multi-MB ``binary`` payloads: Arrow batch *bytes*,
     not row count, is what bounds Python-worker memory (SURVEY §7 risk 4).
-    Python workers fork from :mod:`markmuse_spark.worker_daemon`, which
-    spares each task a re-read of every zip archive on the worker's path.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -35,7 +33,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.columnarReaderBatchSize", "4096")
         .config("spark.python.worker.reuse", "true")
-        .config("spark.python.daemon.module", "markmuse_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

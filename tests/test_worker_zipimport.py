@@ -1,5 +1,6 @@
-"""The worker daemon's zip-importer override: an unchanged archive is not
-re-read by ``importlib.invalidate_caches()``, a rewritten one is."""
+"""The worker zip-importer override: an unchanged archive is not re-read by
+``importlib.invalidate_caches()``, a rewritten one is, and only Spark tasks
+install it."""
 
 from __future__ import annotations
 
@@ -33,7 +34,7 @@ def _count_reads(archive=None):
 
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ reloads lazily")
 def test_unchanged_archive_not_reread(tmp_path, monkeypatch):
-    from markmuse_spark.worker_daemon import invalidate_caches
+    from markmuse_spark.worker_zipimport import invalidate_caches
 
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", invalidate_caches)
     archive = str(tmp_path / "mods.zip")
@@ -58,10 +59,13 @@ def test_unchanged_archive_not_reread(tmp_path, monkeypatch):
 
 
 def _reads_in_worker(batches):
-    # The warm-up call re-reads importers created since this task's own
-    # setup (unpickling the function may import new pyspark subpackages);
-    # Spark hands a task to the oldest idle worker, so a warm-up task
-    # would not reliably warm the worker that runs the next one.
+    # Unpickling any markmuse_spark function imports the package, which
+    # installs the override; this function is shipped by value, so import
+    # it here.  The warm-up call then re-reads the importers that have no
+    # stamp yet; Spark hands a task to the oldest idle worker, so a
+    # warm-up task would not reliably warm the worker that runs the next.
+    import markmuse_spark  # noqa: F401
+
     importlib.invalidate_caches()
     n = _count_reads()
     for _ in batches:
@@ -80,3 +84,10 @@ def test_worker_skips_unchanged_zip_reloads(spark):
     # without the override every zipimporter in the worker (pyspark.zip,
     # its subpackages, the spark-core jar) re-reads its archive: ~16
     assert rows[0]["reads"] == 0
+
+
+def test_driver_keeps_stock_invalidate_caches(spark):
+    import markmuse_spark.worker_zipimport as wz
+
+    wz.install_in_worker()
+    assert zipimport.zipimporter.invalidate_caches is wz._reload
