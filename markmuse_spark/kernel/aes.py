@@ -1,62 +1,33 @@
-"""AES-128/256 for encrypted-PDF support: OpenSSL first, FIPS-197 fallback.
+"""AES-128/192/256 for encrypted-PDF support, on OpenSSL.
 
-The reference reads any PDF via its OCR service
-(``/root/reference/markmuse.py:266-299``) so it never needs a cipher —
-but a wild corpus contains AES-encrypted PDFs (AESV2 since Acrobat 7,
-AESV3/AES-256 the modern default), and an extraction engine that fails
-them all leaves real data on the floor.  ``cryptography>=43`` is a
-declared dependency, and when it imports (the default) the public entry
-points below run on OpenSSL.  The from-scratch code in this module is
-the fallback for an interpreter without it and the conformance
-reference the OpenSSL path is tested against.  Everything here derives from
-the public FIPS-197 spec; the S-box and GF(2^8) multiplication tables
-are COMPUTED at import from the field definition (multiplicative
-inverse + affine transform) rather than transcribed, and the round
-functions use the classic 32-bit T-table decomposition (one fused
-SubBytes+ShiftRows+MixColumns lookup per state byte).
+The reference reads any PDF via its OCR service (``markmuse.py:266-299``)
+so it never needs a cipher — but a wild corpus contains AES-encrypted
+PDFs (AESV2 since Acrobat 7, AESV3/AES-256 the modern default), and an
+extraction engine that fails them all leaves real data on the floor.
+Every cipher call below runs on OpenSSL through the declared
+``cryptography>=43`` dependency, imported unconditionally: an
+interpreter without it fails at import.
 
-The fallback has two execution styles, matched to where each runs:
-
-* **Scalar / serial** (:func:`encrypt_block`, :func:`cbc_encrypt`) —
-  pure-Python T-table rounds on four 32-bit words.  Used where
-  chaining forces serial work anyway: CBC *encryption* (corpus
-  writer) and the PDF 2.0 Algorithm-2.B KDF, whose 64+ chained
-  AES-CBC-2048 rounds are *deliberately* sequential (password
-  hardening — native-AES readers pay the same block count).
-* **Vectorized batch decrypt** (:func:`cbc_decrypt_batch`) — the
-  fallback's extraction hot path.  CBC *decryption* is embarrassingly parallel
-  (ECB-decrypt every block, then XOR each with the previous
-  ciphertext block), and AddRoundKey is the ONLY key-dependent step
-  of the T-table inverse cipher — so one numpy pass decrypts every
-  stream of a file in a single ``(n_blocks, 4)``-word batch even
-  when each stream has a different per-object key (AESV2): per-block
-  round keys are just a second XOR operand.
+The module also keeps a from-scratch FIPS-197 forward cipher
+(:func:`expand_key`, :func:`encrypt_block`).  No production path runs
+it: it is the conformance reference that the Appendix-C vectors and
+the OpenSSL parity test in ``tests/test_kernel_pdf.py`` check.  Its
+S-box and GF(2^8) multiplication tables are COMPUTED at import from
+the field definition (multiplicative inverse + affine transform)
+rather than transcribed, and its rounds use the classic 32-bit T-table
+decomposition (one fused SubBytes+ShiftRows+MixColumns lookup per
+state byte).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-# OpenSSL-backed default path (round-8 optimization): when the
-# ``cryptography`` dependency is importable, the CBC/ECB entry
-# points below dispatch to it — byte-identical output (AES is AES; the
-# parity is pinned by tests/test_kernel_pdf.py::test_aes_openssl_parity)
-# at native speed, which matters because the PDF 2.0 Algorithm-2.B KDF
-# deliberately chains 64+ AES-CBC-2048 rounds (measured 32% of the PDF
-# kernel's per-doc cost on the bench corpus before this path).  The
-# from-scratch FIPS-197 implementation remains the documented fallback
-# and the conformance reference; nothing else in this module changes.
-try:  # pragma: no cover - exercised via the public entry points
-    from cryptography.hazmat.primitives.ciphers import Cipher as _OsslCipher
-    from cryptography.hazmat.primitives.ciphers.algorithms import AES as _OsslAES
-    from cryptography.hazmat.primitives.ciphers.modes import (
-        CBC as _OsslCBC,
-        ECB as _OsslECB,
-    )
-
-    _HAVE_OSSL = True
-except Exception:  # pragma: no cover
-    _HAVE_OSSL = False
+from cryptography.hazmat.primitives.ciphers import Cipher as _OsslCipher
+from cryptography.hazmat.primitives.ciphers.algorithms import AES as _OsslAES
+from cryptography.hazmat.primitives.ciphers.modes import (
+    CBC as _OsslCBC,
+    ECB as _OsslECB,
+)
 
 # ---------------------------------------------------------------------
 # GF(2^8) tables, computed from the field (FIPS-197 §4), not transcribed
@@ -103,19 +74,14 @@ def _build_sbox() -> np.ndarray:
 
 
 SBOX = _build_sbox()
-INV_SBOX = np.zeros(256, np.uint8)
-INV_SBOX[SBOX] = np.arange(256, dtype=np.uint8)
 
-_MUL = {
-    k: np.array([_gmul(i, k) for i in range(256)], np.uint8)
-    for k in (2, 3, 9, 11, 13, 14)
-}
+_MUL = {k: np.array([_gmul(i, k) for i in range(256)], np.uint8) for k in (2, 3)}
 
 # State layout: flat byte index r + 4c (FIPS-197 §3.4, column-major);
 # a column is 4 consecutive bytes, viewed little-endian as one uint32
-# word (row 0 in the low byte).  T-tables fuse (Inv)SubBytes with the
-# (Inv)MixColumns column pattern; (Inv)ShiftRows becomes the gather of
-# which column each row byte is read from.
+# word (row 0 in the low byte).  T-tables fuse SubBytes with the
+# MixColumns column pattern; ShiftRows becomes the choice of which
+# column each row byte is read from.
 
 
 def _word_table(sub: np.ndarray, coef: tuple[int, int, int, int]) -> np.ndarray:
@@ -136,20 +102,8 @@ _TE = [
     _word_table(SBOX, coef)
     for coef in ((2, 1, 1, 3), (3, 2, 1, 1), (1, 3, 2, 1), (1, 1, 3, 2))
 ]
-_TE_PY = [t.tolist() for t in _TE]  # python ints for the scalar path
+_TE_PY = [t.tolist() for t in _TE]  # python ints for the scalar rounds
 _SB_PY = SBOX.tolist()
-
-# decrypt: InvMixColumns row pattern (14,9,13,11) rotated per source row
-_TD = [
-    _word_table(INV_SBOX, coef)
-    for coef in ((14, 9, 13, 11), (11, 14, 9, 13), (13, 11, 14, 9), (9, 13, 11, 14))
-]
-# final decrypt round: InvSubBytes only, as word-positioned lookups
-_IS = [INV_SBOX.astype(np.uint32) << (8 * k) for k in range(4)]
-
-# which column each row-byte is gathered from, per output column 0..3
-_ENC_GATHER = [[(c + r) % 4 for c in range(4)] for r in range(4)]
-_DEC_GATHER = [[(c - r) % 4 for c in range(4)] for r in range(4)]
 
 _RCON = [1]
 while len(_RCON) < 15:
@@ -187,7 +141,9 @@ def _key_words_py(rk: np.ndarray) -> list[list[int]]:
 
 
 # ---------------------------------------------------------------------
-# scalar forward cipher (serial-only call sites: writer CBC, 2.B KDF)
+# scalar forward cipher: the reference run only by
+# tests/test_kernel_pdf.py (test_aes_fips197_known_vectors' Appendix-C
+# vectors, test_aes_openssl_parity's CBC/ECB comparison)
 # ---------------------------------------------------------------------
 
 
@@ -227,149 +183,27 @@ def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """CBC forward, NO padding (callers pad; the 2.B KDF must not)."""
     if len(data) % 16:
         raise ValueError("cbc_encrypt: data not block-aligned")
-    if _HAVE_OSSL:
-        _check_key_len(key)
-        enc = _OsslCipher(_OsslAES(key), _OsslCBC(iv[:16])).encryptor()
-        return enc.update(data) + enc.finalize()
-    kw = _key_words_py(expand_key(key))
-    p0 = int.from_bytes(iv[0:4], "little")
-    p1 = int.from_bytes(iv[4:8], "little")
-    p2 = int.from_bytes(iv[8:12], "little")
-    p3 = int.from_bytes(iv[12:16], "little")
-    out = bytearray(len(data))
-    for i in range(0, len(data), 16):
-        p0, p1, p2, p3 = _enc_words(
-            kw,
-            p0 ^ int.from_bytes(data[i : i + 4], "little"),
-            p1 ^ int.from_bytes(data[i + 4 : i + 8], "little"),
-            p2 ^ int.from_bytes(data[i + 8 : i + 12], "little"),
-            p3 ^ int.from_bytes(data[i + 12 : i + 16], "little"),
-        )
-        out[i : i + 4] = p0.to_bytes(4, "little")
-        out[i + 4 : i + 8] = p1.to_bytes(4, "little")
-        out[i + 8 : i + 12] = p2.to_bytes(4, "little")
-        out[i + 12 : i + 16] = p3.to_bytes(4, "little")
-    return bytes(out)
+    _check_key_len(key)
+    enc = _OsslCipher(_OsslAES(key), _OsslCBC(iv[:16])).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
 def ecb_encrypt(key: bytes, data: bytes) -> bytes:
     """ECB forward, no padding (the /Perms field is one raw block)."""
-    if _HAVE_OSSL and len(data) % 16 == 0:
-        _check_key_len(key)
-        enc = _OsslCipher(_OsslAES(key), _OsslECB()).encryptor()
-        return enc.update(data) + enc.finalize()
-    rk = expand_key(key)
-    return b"".join(
-        encrypt_block(rk, data[i : i + 16]) for i in range(0, len(data), 16)
-    )
-
-
-# ---------------------------------------------------------------------
-# vectorized batch inverse cipher (the extraction hot path)
-# ---------------------------------------------------------------------
-
-
-def _dec_key_words(rk: np.ndarray) -> np.ndarray:
-    """T-table decrypt round keys: first and last untouched, middle
-    rounds InvMixColumns-transformed (FIPS-197 §5.3.5 equivalent
-    inverse cipher).  ``(rounds+1, 4)`` uint32, indexed by the round
-    number the DECRYPT loop uses (0 = final AddRoundKey)."""
-    dk = rk.copy().reshape(len(rk), 4, 4)
-    for r in range(1, len(rk) - 1):
-        col = dk[r]
-        a0, a1, a2, a3 = col[:, 0].copy(), col[:, 1].copy(), col[:, 2].copy(), col[:, 3].copy()
-        col[:, 0] = _MUL[14][a0] ^ _MUL[11][a1] ^ _MUL[13][a2] ^ _MUL[9][a3]
-        col[:, 1] = _MUL[9][a0] ^ _MUL[14][a1] ^ _MUL[11][a2] ^ _MUL[13][a3]
-        col[:, 2] = _MUL[13][a0] ^ _MUL[9][a1] ^ _MUL[14][a2] ^ _MUL[11][a3]
-        col[:, 3] = _MUL[11][a0] ^ _MUL[13][a1] ^ _MUL[9][a2] ^ _MUL[14][a3]
-    w = dk.astype(np.uint32)
-    return w[:, :, 0] | w[:, :, 1] << 8 | w[:, :, 2] << 16 | w[:, :, 3] << 24
-
-
-_G1, _G2, _G3 = _DEC_GATHER[1], _DEC_GATHER[2], _DEC_GATHER[3]
-
-
-def _inv_cipher_words(W: np.ndarray, dkw: list[np.ndarray]) -> np.ndarray:
-    """Inverse cipher over ``(n, 4)`` uint32 word-blocks; ``dkw[r]`` is
-    the per-block round-key matrix ``(n, 4)`` (heterogeneous keys ride
-    one batch — AddRoundKey is the only key-dependent step)."""
-    td0, td1, td2, td3 = _TD
-    is0, is1, is2, is3 = _IS
-    W = W ^ dkw[-1]
-    for r in range(len(dkw) - 2, 0, -1):
-        W = (
-            td0[W & 255]
-            ^ td1[(W[:, _G1] >> 8) & 255]
-            ^ td2[(W[:, _G2] >> 16) & 255]
-            ^ td3[W[:, _G3] >> 24]
-            ^ dkw[r]
-        )
-    return (
-        is0[W & 255]
-        ^ is1[(W[:, _G1] >> 8) & 255]
-        ^ is2[(W[:, _G2] >> 16) & 255]
-        ^ is3[W[:, _G3] >> 24]
-        ^ dkw[0]
-    )
-
-
-def cbc_decrypt_batch(
-    segments: list[tuple[bytes, bytes, bytes]],
-) -> list[bytes]:
-    """Decrypt many independent CBC segments in ONE vectorized pass.
-
-    ``segments``: ``(key, iv, ciphertext)`` per stream; keys may differ
-    (AESV2 derives one per object) but must share a length (one file
-    never mixes AES-128 and AES-256 stream keys).  No unpadding here —
-    PDF padding validation is the caller's policy.  Returns plaintexts
-    in order."""
-    if not segments:
-        return []
-    klen = len(segments[0][0])
-    counts = []
-    for key, _iv, ct in segments:
-        if len(key) != klen:
-            raise ValueError("cbc_decrypt_batch: mixed key lengths")
-        if len(ct) % 16 or not ct:
-            raise ValueError("cbc_decrypt_batch: ciphertext not block-aligned")
-        counts.append(len(ct) // 16)
-    if _HAVE_OSSL:
-        _check_key_len(segments[0][0])
-        out = []
-        for key, iv, ct in segments:
-            dec = _OsslCipher(_OsslAES(key), _OsslCBC(iv[:16])).decryptor()
-            out.append(dec.update(ct) + dec.finalize())
-        return out
-    cipher = np.frombuffer(
-        b"".join(ct for _k, _iv, ct in segments), np.uint8
-    ).reshape(-1, 16)
-    n_rounds = klen // 4 + 6
-    reps = np.array(counts)
-    per_seg = np.stack([_dec_key_words(expand_key(k)) for k, _iv, _ct in segments])
-    dkw = [
-        np.repeat(per_seg[:, rnd, :], reps, axis=0)
-        for rnd in range(n_rounds + 1)
-    ]
-    plain = _inv_cipher_words(np.ascontiguousarray(cipher).view("<u4"), dkw)
-    plain = np.ascontiguousarray(plain.astype("<u4")).view(np.uint8).reshape(-1, 16)
-    # CBC chain: P_i = D(C_i) ^ C_{i-1}, with the IV at each segment head
-    chain = np.empty_like(cipher)
-    pos = 0
-    for (_k, iv, _ct), n in zip(segments, counts):
-        chain[pos] = np.frombuffer(iv, np.uint8)
-        if n > 1:
-            chain[pos + 1 : pos + n] = cipher[pos : pos + n - 1]
-        pos += n
-    plain ^= chain
-    out, pos = [], 0
-    for n in counts:
-        out.append(plain[pos : pos + n].tobytes())
-        pos += n
-    return out
+    _check_key_len(key)
+    enc = _OsslCipher(_OsslAES(key), _OsslECB()).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
 def cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    return cbc_decrypt_batch([(key, iv, data)])[0]
+    """CBC inverse, no unpadding (PDF padding validation is the
+    caller's policy).  ``data`` comes from untrusted PDF bytes, so its
+    shape is checked here and fails as a ValueError."""
+    if len(data) % 16 or not data:
+        raise ValueError("cbc_decrypt: ciphertext not block-aligned")
+    _check_key_len(key)
+    dec = _OsslCipher(_OsslAES(key), _OsslCBC(iv[:16])).decryptor()
+    return dec.update(data) + dec.finalize()
 
 
 # ---------------------------------------------------------------------

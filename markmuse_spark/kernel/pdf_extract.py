@@ -62,8 +62,9 @@ opaque sample bytes are stripped before text tokenization
 (Standard security handler V1-2/R2-3, empty user password — the
 dominant wild encrypted form): :func:`_decrypt_payload` derives the
 file key per spec algorithm 2, verifies ``/U``, and RC4s every stream
-body in place; AES (V4+) and real passwords fail LOUDLY with a
-structured error, never byte salad.
+body in place (AESV2/AESV3 decrypt through :mod:`kernel.aes`); real
+passwords and unknown handlers fail LOUDLY with a structured error,
+never byte salad.
 """
 
 from __future__ import annotations
@@ -73,6 +74,9 @@ import re
 import zlib
 from collections import Counter
 from typing import Any, Sequence
+
+from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4 as _OsslARC4
+from cryptography.hazmat.primitives.ciphers import Cipher as _OsslCipher
 
 from markmuse_spark.kernel import glyphlist
 
@@ -989,26 +993,20 @@ _PW_PAD = bytes.fromhex(
 )
 
 
-try:  # OpenSSL-backed RC4 (round-8 optimization; same dispatch-with-
-    # fallback shape as kernel/aes.py — output parity pinned in tests)
-    from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4 as _OsslARC4
-    from cryptography.hazmat.primitives.ciphers import Cipher as _OsslCipher
-except Exception:  # pragma: no cover
-    _OsslARC4 = None
-
-
 def _rc4(key: bytes, data: bytes) -> bytes:
-    if _OsslARC4 is not None:
-        try:
-            # ARC4 accepts only specific key sizes (40/56/64/80/128...
-            # bits); PDF keys of other lengths take the pure fallback
-            return _OsslCipher(_OsslARC4(key), mode=None).encryptor().update(data)
-        except ValueError:
-            pass
-    return _rc4_py(key, data)
+    try:
+        return _OsslCipher(_OsslARC4(key), mode=None).encryptor().update(data)
+    except ValueError:
+        return _rc4_py(key, data)
 
 
 def _rc4_py(key: bytes, data: bytes) -> bytes:
+    # OpenSSL's ARC4 takes only 5/7/8/10/16/20/24/32-byte keys, but PDF
+    # Algorithms 1/2 also produce 6, 9 and 11-15 byte ones: file keys for
+    # a /Length of 48, 72 or 88-120 bits, and the per-object keys (file
+    # key + 5 bytes) of every 6-10 byte file key.  Those run here, and
+    # tests/test_kernel_pdf.py::test_aes_openssl_parity checks every
+    # length from 5 to 16 bytes against OpenSSL.
     s = list(range(256))
     j = 0
     klen = len(key)
@@ -1096,27 +1094,25 @@ def _aes_rebuild(
     ``/Length`` integer is overwritten space-padded to its original
     digit width.  Every offset-bearing structure (``startxref``, xref
     table entries, object headers) therefore stays valid on the
-    decrypted copy.  One vectorized batch decrypts all streams of the
-    file (:func:`markmuse_spark.kernel.aes.cbc_decrypt_batch` — per-
-    block round keys, so AESV2's per-object keys share the pass)."""
-    import hashlib
-
+    decrypted copy.  Each stream decrypts with one OpenSSL CBC call
+    (:func:`markmuse_spark.kernel.aes.cbc_decrypt`) under its own key:
+    the per-object key for AESV2, the file key for AESV3."""
     from markmuse_spark.kernel import aes
 
-    segments = []
-    for (_h, _head, data, (_s, _e)), num in todo:
+    # every body's shape is checked before any decrypts, so a file with
+    # both a misaligned and a badly padded stream reports the former
+    for (_h, _head, data, _span), _num in todo:
         if len(data) < 32 or (len(data) - 16) % 16:
             raise ValueError(
                 "encrypted PDF: AES stream body not block-aligned"
             )
+    out = bytearray(payload)
+    for (hdr_start, head, data, (s, e)), num in todo:
         if cipher == "aesv2":
             okey = _aes_object_key(file_key, num)
         else:
             okey = file_key
-        segments.append((okey, data[:16], data[16:]))
-    plains = aes.cbc_decrypt_batch(segments)
-    out = bytearray(payload)
-    for ((hdr_start, head, data, (s, e)), _num), pt in zip(todo, plains):
+        pt = aes.cbc_decrypt(okey, data[:16], data[16:])
         pad = pt[-1] if pt else 0
         if not 1 <= pad <= 16 or pt[-pad:] != bytes([pad]) * pad:
             raise ValueError("encrypted PDF: bad AES padding")
@@ -1217,8 +1213,8 @@ def _decrypt_payload(payload: bytes) -> tuple:
 
     Supported: the Standard handler — ``/V`` 1-2 ``/R`` 2-3 (RC4 40-128
     bit, the pre-AES Acrobat form), ``/V`` 4 ``/R`` 4 (``/CFM`` V2 or
-    AESV2, corpus v11) and ``/V`` 5 ``/R`` 5-6 (AES-256 via the
-    from-scratch FIPS-197 module :mod:`markmuse_spark.kernel.aes`) —
+    AESV2, corpus v11) and ``/V`` 5 ``/R`` 5-6 (AES-256; both AES forms
+    decrypt on OpenSSL through :mod:`markmuse_spark.kernel.aes`) —
     all with the empty user password.  Everything else fails LOUDLY
     with a structured ValueError (``encrypted PDF: ...``) that the
     extraction operator surfaces as the row's error column: an

@@ -343,15 +343,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    seed: int = 12345,
+def _signature_from_shingled(
+    sh: DataFrame, num_perm: int, seed: int
 ) -> DataFrame:
-    """MinHash signatures as ``array<long>``.
+    """(doc_id, signature) MinHash signatures as ``array<long>`` from an
+    already-shingled frame, so :func:`minhash_lsh_pairs` reuses ONE
+    shingle pass for both the signature and the exact-Jaccard
+    verification stages.
 
     Two-stage split chosen by measurement:
 
@@ -371,17 +369,6 @@ def minhash_signature(
     min under any fixed total order of a random bijection is a valid
     MinHash permutation family.
     """
-    return _signature_from_shingled(
-        _shingled(docs, id_col, text_col, n), num_perm, seed
-    )
-
-
-def _signature_from_shingled(
-    sh: DataFrame, num_perm: int, seed: int
-) -> DataFrame:
-    """(doc_id, signature) from an already-shingled frame — split out so
-    :func:`minhash_lsh_pairs` can reuse ONE shingle pass for both the
-    signature and the exact-Jaccard verification stages."""
     import numpy as np
     import pandas as pd
 

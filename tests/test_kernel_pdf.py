@@ -1201,9 +1201,9 @@ def test_aes_fips197_known_vectors():
 
 
 def test_aes_cbc_batch_roundtrip_and_errors():
-    """The vectorized batch decrypt handles heterogeneous per-segment
-    keys/IVs/lengths in one pass (the AESV2 shape: one key per object)
-    and rejects malformed input loudly."""
+    """CBC decrypt inverts encrypt across heterogeneous per-segment
+    keys/IVs/lengths (the AESV2 shape: one key per object) and rejects
+    malformed input loudly."""
     import hashlib
 
     from markmuse_spark.kernel import aes
@@ -1215,29 +1215,30 @@ def test_aes_cbc_batch_roundtrip_and_errors():
         data = hashlib.sha256(b"d%d" % i).digest() * (i + 1)
         segs.append((k, iv, aes.cbc_encrypt(k, iv, data)))
         want.append(data)
-    assert aes.cbc_decrypt_batch(segs) == want
-    with pytest.raises(ValueError, match="mixed key lengths"):
-        aes.cbc_decrypt_batch([segs[0], (b"x" * 32, bytes(16), bytes(16))])
+    assert [aes.cbc_decrypt(k, iv, ct) for k, iv, ct in segs] == want
     with pytest.raises(ValueError, match="not block-aligned"):
-        aes.cbc_decrypt_batch([(b"k" * 16, bytes(16), b"short")])
+        aes.cbc_decrypt(b"k" * 16, bytes(16), b"short")
+    with pytest.raises(ValueError, match="not block-aligned"):
+        aes.cbc_decrypt(b"k" * 16, bytes(16), b"")
+    with pytest.raises(ValueError, match="AES key"):
+        aes.cbc_decrypt(b"k" * 10, bytes(16), bytes(16))
     with pytest.raises(ValueError, match="not block-aligned"):
         aes.cbc_encrypt(b"k" * 16, bytes(16), b"123")
+    with pytest.raises(ValueError):
+        aes.ecb_encrypt(b"k" * 16, b"123")
     with pytest.raises(ValueError, match="AES key"):
         aes.expand_key(b"tiny")
 
 
 def test_aes_openssl_parity():
-    """Round-8 optimization contract: the OpenSSL-dispatched entry points
-    (cbc_encrypt / ecb_encrypt / cbc_decrypt_batch, plus the pdf_extract
-    RC4 wrapper) are byte-identical to the from-scratch FIPS-197
-    fallback across key sizes, IVs and multi-segment batches."""
+    """The OpenSSL entry points (cbc_encrypt / ecb_encrypt / cbc_decrypt,
+    plus the pdf_extract RC4 wrapper) are byte-identical to the
+    from-scratch FIPS-197 and RC4 references across key sizes, IVs and
+    multi-segment inputs."""
     import hashlib
 
     from markmuse_spark.kernel import aes
     from markmuse_spark.kernel.pdf_extract import _rc4, _rc4_py
-
-    if not aes._HAVE_OSSL:
-        pytest.skip("cryptography not installed: nothing to compare")
 
     def _cbc_encrypt_py(key, iv, data):
         kw = aes._key_words_py(aes.expand_key(key))
@@ -1267,8 +1268,7 @@ def test_aes_openssl_parity():
             ]
             want = _cbc_encrypt_py(key, iv, data)
             assert aes.cbc_encrypt(key, iv, data) == want
-            # batch decrypt must invert it (exercises the OpenSSL branch)
-            assert aes.cbc_decrypt_batch([(key, iv, want)]) == [data]
+            assert aes.cbc_decrypt(key, iv, want) == data
         # ECB against the pure block cipher
         blocks = hashlib.sha256(b"e%d" % klen).digest()[:16] * 3
         rk = aes.expand_key(key)
@@ -1276,25 +1276,10 @@ def test_aes_openssl_parity():
             aes.encrypt_block(rk, blocks[i : i + 16]) for i in range(0, 48, 16)
         )
         assert aes.ecb_encrypt(key, blocks) == want_ecb
-    # heterogeneous batch in one call
-    segs, plain = [], []
-    for i in range(5):
-        k = hashlib.sha256(b"bk%d" % i).digest()[:16]
-        iv = hashlib.sha256(b"biv%d" % i).digest()[:16]
-        d = hashlib.sha256(b"bd%d" % i).digest() * (i + 1)
-        segs.append((k, iv, aes.cbc_encrypt(k, iv, d)))
-        plain.append(d)
-    assert aes.cbc_decrypt_batch(segs) == plain
-    # the numpy fallback must agree with the OpenSSL path on the same
-    # batch (this is the only remaining caller of the vectorized
-    # inverse cipher when cryptography is installed)
-    aes._HAVE_OSSL = False
-    try:
-        assert aes.cbc_decrypt_batch(segs) == plain
-    finally:
-        aes._HAVE_OSSL = True
-    # RC4 wrapper vs pure fallback across PDF key lengths
-    for klen in (5, 7, 9, 10, 16):
+    # RC4 wrapper vs pure fallback at every key length PDF Algorithms
+    # 1/2 produce: OpenSSL takes 5/7/8/10/16 bytes, and the other
+    # lengths must still reach _rc4_py through its ValueError
+    for klen in range(5, 17):
         k = hashlib.sha256(b"rk%d" % klen).digest()[:klen]
         d = hashlib.sha256(b"rd").digest() * 4
         assert _rc4(k, d) == _rc4_py(k, d)
@@ -2643,10 +2628,10 @@ def test_aesv3_u_verify_and_ue_unwrap_replica_chain():
         assert unwrapped == key
         # /Perms: decrypts under the file key to 'adb' marker (spec
         # 7.6.4.4.12); P = -44 little-endian in the first 4 bytes
-        pdec = aes.ecb_decrypt(key, perms) if hasattr(aes, "ecb_decrypt") else None
-        if pdec is not None:
-            assert pdec[9:12] == b"adb"
-            assert int.from_bytes(pdec[:4], "little", signed=True) == -44
+        # (one block: CBC with a zero IV is ECB, as the kernel reads it)
+        pdec = aes.cbc_decrypt(key, bytes(16), perms[:16])
+        assert pdec[9:12] == b"adb"
+        assert int.from_bytes(pdec[:4], "little", signed=True) == -44
 
 
 # ---------------------------------------------------------------------------
